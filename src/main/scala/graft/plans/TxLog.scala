@@ -20,10 +20,12 @@ import scala.jdk.CollectionConverters._
   * writers or one writer + many readers share a corpus.
   *
   * Design (Spark-first, scale-first):
-  *  - Data files are written by ordinary `df.write.parquet` into a
-  *    commit-unique subdirectory — executor-side, one file per partition,
-  *    never moved and never mutated. The driver handles only the file
-  *    NAME list (O(files) strings, not rows).
+  *  - Data files are written by Spark's `FileFormatWriter` into a
+  *    commit-unique subdirectory ([[TxLogWriter]]) — executor-side, one
+  *    file per task and partition value, at its final name (unique per
+  *    task attempt), never moved and never mutated. Each write task
+  *    builds its files' zone maps; the driver handles only the file NAME
+  *    list and those stats (O(files), not rows).
   *  - A commit is one small JSON file `_graft_log/<v020>.json` holding
   *    {op, add[], remove[], schema, dataChange}. Readers replay the log;
   *    the live set at version V is exactly (∪ add) − (∪ remove) over
@@ -1088,16 +1090,9 @@ object TxLog {
       .withColumn(classCol,
         org.apache.spark.sql.functions.when(cond, "delete").otherwise("carry"))
       .repartition(math.max(1, affected.length))
-    // direct per-task write when the layout allows it: the class column
-    // has 2 values, so the writer map stays tiny, and the carry files'
-    // zone maps come back from the write tasks — no footer reads after
-    // the rename below. Classic sorted writer otherwise.
-    val directStage: Option[Map[String, Map[String, ColStats]]] =
-      directPartitioned(stageDf, stage, classParts).map(_.toMap)
-    if (directStage.isEmpty)
-      stageDf.write.mode("errorifexists")
-        .partitionBy(classParts: _*)
-        .parquet(stage.toString)
+    // the carry files' zone maps come back from the write tasks — no
+    // footer reads after the move below
+    val byStageRel = TxLogWriter.write(stageDf, stage.toString, classParts).toMap
     def classFiles(cls: String): Seq[Path] = {
       val dir = stage.resolve(s"$classCol=$cls")
       if (!Files.isDirectory(dir)) Nil
@@ -1122,21 +1117,12 @@ object TxLog {
       (s"data/$commitId/${rel.toString}", s"$classCol=carry/${rel.toString}")
     }
     val files0: Seq[String] = moved.map(_._1).sorted
-    val stats0 = directStage match {
-      case Some(byStageRel) =>
-        // in-task stats from the stage write, re-keyed through the move;
-        // partition-value zone maps synthesize from the final paths the
-        // same way harvestStats does
-        val partKinds = partKindsOf(schema, snap.partitionCols)
-        moved.map { case (full, stageRel) =>
-          full -> (byStageRel.getOrElse(stageRel,
-            throw new IllegalStateException(
-              s"direct stage write lost stats for $stageRel")) ++
-            partitionValuesOf(full, snap.partitionCols).map {
-              case (c, v) => c -> ColStats(partKinds(c), v, v) })
-        }.toMap
-      case None => harvestStats(table, files0, snap.partitionCols, schema)
-    }
+    // in-task stats from the stage write, re-keyed through the move
+    val stats0 = moved.map { case (full, stageRel) =>
+      full -> withPartitionStats(full, byStageRel.getOrElse(stageRel,
+        throw new IllegalStateException(s"stage write lost stats for $stageRel")),
+        schema, snap.partitionCols)
+    }.toMap
     val written = files0.map(f =>
       stats0.get(f).flatMap(_.get(RowCountKey)).map(_.min.toLong).getOrElse(0L)).sum
     val (files, stats) =
@@ -1647,14 +1633,6 @@ object TxLog {
         "inconsistently); materialize the predicate into a column first")
   }
 
-  /** Persist a COW kernel's change rows (schema + `_change_type`) under
-    * `_change_data/` — never part of the live file set, invisible to
-    * vacuum's `data/` walk, read back only by [[changeFeed]]. */
-  /** Toggle for single-JVM A/B probes (and emergencies): false runs the
-    * merge's "concurrent" CDF write inline, restoring the sequential
-    * round-13 shape. Not env-driven. */
-  @volatile private[graft] var overlapWrites: Boolean = true
-
   /** Daemon pool for overlapping independent write jobs of one commit
     * (guide: concurrent driver-submitted jobs back-fill the tail of the
     * running job). Bounded by usage — one in-flight write per commit. */
@@ -1664,9 +1642,7 @@ object TxLog {
     })
 
   private def submitConcurrently[A](body: => A): java.util.concurrent.Future[A] =
-    if (!overlapWrites)
-      java.util.concurrent.CompletableFuture.completedFuture(body)
-    else writePool.submit(new java.util.concurrent.Callable[A] {
+    writePool.submit(new java.util.concurrent.Callable[A] {
       def call(): A = body
     })
 
@@ -1679,24 +1655,15 @@ object TxLog {
         throw Option(e.getCause).getOrElse(e)
     }
 
+  /** Persist a COW kernel's change rows (schema + `_change_type`) under
+    * `_change_data/` — never part of the live file set, invisible to
+    * vacuum's `data/` walk, read back only by [[changeFeed]]. */
   private def writeChangeData(
       df: DataFrame, table: String, parallelism: Int): Seq[String] = {
     val id = java.util.UUID.randomUUID().toString.replace("-", "").take(16)
     val dir = Paths.get(table, ChangeDataDirName, id)
-    val rep = df.repartition(math.max(1, parallelism))
-    // change data needs no zone maps; the direct path still wins by
-    // skipping the committer staging+rename pass (same fallback rule
-    // as writeData)
-    DirectParquet.write(rep, dir.toString) match {
-      case Some(out) =>
-        out.map { case (name, _) => s"$ChangeDataDirName/$id/$name" }
-      case None =>
-        rep.write.mode("errorifexists").parquet(dir.toString)
-        Option(dir.toFile.listFiles()).getOrElse(Array.empty)
-          .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-          .map(f => s"$ChangeDataDirName/$id/${f.getName}")
-          .sorted.toSeq
-    }
+    TxLogWriter.write(df.repartition(math.max(1, parallelism)), dir.toString, Nil)
+      .map { case (name, _) => s"$ChangeDataDirName/$id/$name" }
   }
 
   /** The newest version committed AT OR BEFORE `tsMillis` — Delta's
@@ -2012,90 +1979,50 @@ object TxLog {
 
   /** Write `df` as parquet under a commit-unique subdir; return the
     * table-relative file list, the (nullable-normalized) schema, and
-    * per-file zone maps. Unpartitioned flat-primitive frames (every hot
-    * commit path) take [[DirectParquet]]: each write task streams its
-    * file AND computes its zone maps inline, shipping (name → stats) to
-    * the commit — zero driver-side footer reads, no FileOutputCommitter
-    * staging (TxLog's manifest entry is the commit protocol, so task
-    * files are invisible until their names publish). Partitioned or
-    * non-primitive frames fall back to `df.write.parquet` + footer
-    * harvest — no second data pass; O(files) footer reads. */
+    * per-file zone maps. The files come from [[TxLogWriter]], whose
+    * write tasks build the data columns' zone maps while writing; the
+    * partition columns' min=max stats are synthesized from the paths. */
   private def writeData(
       df: DataFrame, table: String, partitionBy: Seq[String] = Nil)
       : (Seq[String], String, Map[String, Map[String, ColStats]]) = {
     val commitId = java.util.UUID.randomUUID().toString.replace("-", "").take(16)
-    val dataDir = Paths.get(table, "data", commitId)
+    val dataDir = Paths.get(table, "data", commitId).toString
     // Partition values live ONLY in the path and must round-trip exactly
     // (string → path segment → string → Cast back to the column type).
     // Restrict to types where that round-trip is lossless and the cast
     // is timezone-free; refuse anything else loudly at write time rather
     // than corrupt values at read time.
     requirePartitionable(df.schema, partitionBy)
-    if (partitionBy.isEmpty) {
-      DirectParquet.write(df, dataDir.toString) match {
-        case Some(out) =>
-          val files = out.map { case (name, _) => s"data/$commitId/$name" }
-          val stats = out.map { case (name, st) =>
-            s"data/$commitId/$name" -> st }.filter(_._2.nonEmpty).toMap
-          return (files, nullable(df.schema).json, stats)
-        case None => () // unsupported schema shape: classic path below
-      }
-    } else {
-      directPartitioned(df, dataDir, partitionBy) match {
-        case Some(out) =>
-          val partKinds = partKindsOf(df.schema, partitionBy)
-          val files = out.map { case (rel, _) => s"data/$commitId/$rel" }
-          val stats = out.map { case (rel, st) =>
-            val full = s"data/$commitId/$rel"
-            full -> (st ++ partitionValuesOf(full, partitionBy).map {
-              case (c, v) => c -> ColStats(partKinds(c), v, v) })
-          }.toMap
-          return (files, nullable(df.schema).json, stats)
-        case None => () // unsupported layout or writer overflow: classic path
-      }
+    val written = TxLogWriter.write(df, dataDir, partitionBy).map { case (rel, st) =>
+      val f = s"data/$commitId/$rel"
+      f -> withPartitionStats(f, st, df.schema, partitionBy)
     }
-    val writer = df.write.mode("errorifexists")
-    (if (partitionBy.isEmpty) writer else writer.partitionBy(partitionBy: _*))
-      .parquet(dataDir.toString)
-    val files: Seq[String] =
-      if (partitionBy.isEmpty)
-        Option(dataDir.toFile.listFiles()).getOrElse(Array.empty)
-          .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-          .map(f => s"data/$commitId/${f.getName}")
-          .sorted.toSeq
-      else {
-        // hive layout: files sit under col=value/ segments; the values
-        // ride in the relative path and feed synthesized zone maps below
-        val stream = Files.walk(dataDir)
-        try stream.iterator().asScala
-          .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
-          .map(p => relativize(table, p))
-          .toSeq.sorted
-        finally stream.close()
-      }
-    val stats = harvestStats(table, files, partitionBy, df.schema)
-    (files, nullable(df.schema).json, stats)
+    (written.map(_._1), nullable(df.schema).json, written.toMap)
   }
 
+  /** A data file's zone maps plus the synthesized min=max=value stats of
+    * the partition values in its path. */
+  private def withPartitionStats(
+      rel: String, st: Map[String, ColStats], schema: StructType,
+      partitionBy: Seq[String]): Map[String, ColStats] =
+    st ++ partitionValuesOf(rel, partitionBy).map { case (c, v) =>
+      import org.apache.spark.sql.types._
+      val kind = schema(c).dataType match {
+        case ByteType | ShortType | IntegerType | LongType => "long"
+        case FloatType | DoubleType => "double"
+        case _ => "string" // dates/strings compare correctly as strings
+      }
+      c -> ColStats(kind, v, v)
+    }
+
   /** Footer-harvested zone maps + synthesized min=max partition-value
-    * stats for a set of files — the ONE stats path both fresh writes
-    * (writeData) and in-place adoption (convert) use, so their guards
-    * (no NULL partition segments, prunable value domains) cannot drift. */
+    * stats for files adopted in place by [[convert]] (fresh writes get
+    * their zone maps from the write tasks instead). */
   private def harvestStats(
       table: String, files: Seq[String], partitionBy: Seq[String],
       schema: StructType): Map[String, Map[String, ColStats]] = {
-    require(files.forall(!_.contains("__HIVE_DEFAULT_PARTITION__")),
-      s"partition column(s) ${partitionBy.mkString(", ")} carry NULL values — " +
-        "a graft partition value must be non-null")
-    // per-partition-column domain for the synthesized min=max=value stats
-    val partKinds = partKindsOf(schema, partitionBy)
     // Footer reads are independent per file and each costs a few ms of
-    // open+parse; a 64-file commit paid ~0.5 s walking them serially on
-    // the driver (measured sf0.1, round 13). Harvest in parallel on a
-    // bounded pool sized to the host, not to any fixed constant — the
-    // same driver-side metadata fan-out Delta's stats collection uses.
-    // (At real scale the footers would be harvested executor-side inside
-    // the write tasks; the commit API receives names only either way.)
+    // open+parse; harvest in parallel on a bounded pool sized to the host.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.max(1, math.min(files.size, Runtime.getRuntime.availableProcessors())))
     try {
@@ -2105,70 +2032,10 @@ object TxLog {
         })
       }
       futures.map { case (rel, fut) =>
-        // unwrap so commit callers see the same exception type/message
-        // the old serial loop threw (ADVICE r13)
-        val footer = awaitConcurrent(fut)
-        val synthesized =
-          if (partitionBy.isEmpty) Map.empty[String, ColStats]
-          else partitionValuesOf(rel, partitionBy).map { case (c, v) =>
-            c -> ColStats(partKinds(c), v, v)
-          }
-        rel -> (footer ++ synthesized)
-      }.filter(_._2.nonEmpty).toMap
+        rel -> withPartitionStats(rel, awaitConcurrent(fut), schema, partitionBy)
+      }.toMap
     } finally pool.shutdown()
   }
-
-  /** Comparison domain of each partition column's synthesized
-    * min=max=value stats — shared by the footer-harvest and direct-write
-    * paths so the two can never drift. */
-  private def partKindsOf(
-      schema: StructType, partitionBy: Seq[String]): Map[String, String] =
-    partitionBy.map { c =>
-      import org.apache.spark.sql.types._
-      c -> (schema(c).dataType match {
-        case ByteType | ShortType | IntegerType | LongType => "long"
-        case FloatType | DoubleType => "double"
-        case _ => "string" // dates/strings compare correctly as strings
-      })
-    }.toMap
-
-  /** [[DirectParquet.writePartitioned]] with the overflow fallback: a
-    * high-cardinality layout that blows the per-task writer cap deletes
-    * the half-written commit dir and reports None so the caller retries
-    * on the classic sorted writer. */
-  private def directPartitioned(
-      df: DataFrame, dir: Path, partitionBy: Seq[String])
-      : Option[Seq[(String, Map[String, ColStats])]] =
-    try DirectParquet.writePartitioned(df, dir.toString, partitionBy)
-    catch {
-      case t: Throwable
-          if causeChain(t).exists(_.isInstanceOf[DirectParquet.TooManyOpenPartitions]) =>
-        deleteTree(dir)
-        None
-      case t: Throwable =>
-        // the NULL-partition refusal surfaced as a driver-side
-        // IllegalArgumentException on the classic path (harvestStats'
-        // require) — keep that contract instead of a SparkException
-        // wrapper now that the check runs inside a task
-        deleteTree(dir)
-        causeChain(t).collectFirst {
-          case e: IllegalArgumentException
-              if e.getMessage != null &&
-                e.getMessage.contains("partition value must be non-null") => e
-        }.foreach(e => throw e)
-        throw t
-    }
-
-  private def causeChain(t: Throwable): List[Throwable] =
-    t :: Option(t.getCause).filter(_ ne t).map(causeChain).getOrElse(Nil)
-
-  private def deleteTree(dir: Path): Unit =
-    if (Files.exists(dir)) {
-      val s = Files.walk(dir)
-      try s.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => { Files.deleteIfExists(p); () })
-      finally s.close()
-    }
 
   /** Partition-column type whitelist (lossless, timezone-free path
     * round-trip) — shared by fresh writes and CONVERT so an adopted
